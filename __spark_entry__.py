@@ -171,7 +171,7 @@ def _q_bm25_merged_topk(spark, sf_dir):
 
 def _q_bm25_deleted_topk(spark, sf_dir):
     """Build the full packed index, DELETE every 5th doc from it
-    (index/delete.py: map-only repack, dictionary re-rank with
+    (index/delete.py: repack, dictionary re-rank with
     vanished terms dropped, maxima vs the post-delete avgdl) and serve
     the standard query batch — the oracle scores a corpus with those
     docs absent, proving deleted == rebuilt in the gate."""
@@ -198,7 +198,7 @@ def _q_bm25_upserted_topk(spark, sf_dir):
     overlap slice (doc_id % 8 == 0) carries deliberately stale content
     and which lacks the doc_id % 4 == 3 slice entirely; build a DELTA
     index carrying the fresh overlap content plus the missing slice;
-    upsert_index (index/merge.py: delete ∘ merge) must then equal a
+    upsert_index (index/merge.py: one repack) must then equal a
     fresh build over the TRUE full corpus — so the oracle is the plain
     full-corpus BM25 SQL, and a surviving stale posting or a dropped
     delta doc hash-mismatches."""
@@ -241,7 +241,7 @@ def _q_bm25_compacted_topk(spark, sf_dir):
     ingest that slice through the real Structured Streaming path
     (start_incremental, two micro-batch file drops → appended posting
     generations + snapshot-stats dictionary appends), then restore
-    exactness with compact_merged (the no-build-shuffle merge kernel).
+    exactness with compact_merged (the no-build-shuffle repack).
     The compacted index must equal a fresh build over the full corpus,
     so the oracle is the plain full-corpus BM25 SQL — a stale snapshot
     statistic, an idf=0 placeholder left unfixed, or a dropped

@@ -106,6 +106,45 @@ def _done(path: str) -> bool:
     return Path(path, "_SUCCESS").exists()
 
 
+def stage_runner(spark: SparkSession, manifest: dict, resume: bool):
+    """Checkpointed stage writer shared by build and repack:
+    ``stage(name, path, producer)`` writes ``producer()`` as parquet at
+    ``path`` unless a resumed run finds it complete (``_SUCCESS``),
+    records the stage in ``manifest["stages"]`` and returns the table
+    read back.  A freshly written table is read back with the schema it
+    was written with, which skips Spark's schema-inference job."""
+
+    def stage(name: str, path: str, producer) -> DataFrame:
+        t0 = time.time()
+        if resume and _done(path):
+            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
+            manifest["stages"][name]["resumed"] = True
+            return spark.read.parquet(path)
+        df = producer()
+        df.write.mode("overwrite").parquet(path)
+        manifest["stages"][name] = {
+            "path": path,
+            "seconds": round(time.time() - t0, 3),
+            "resumed": False,
+        }
+        return spark.read.schema(df.schema).parquet(path)
+
+    return stage
+
+
+def params_from_manifest(m: dict) -> IndexParams:
+    """The IndexParams an index was built with (its manifest's ``params``)."""
+    p = m["params"]
+    return IndexParams(
+        block_size=int(p["block_size"]),
+        segment_doc_window=int(p["segment_doc_window"]),
+        bm25=BM25Params(
+            k1=p["k1"], b=p["b"], delta=p["delta"],
+            variant=p["variant"], epsilon=p["epsilon"],
+        ),
+    )
+
+
 def input_fingerprint(*parts) -> str:
     """Stable hash of an incremental operation's inputs (source roots,
     deleted-id sets, source index stats).  Recorded as ``input_fp`` in
@@ -410,20 +449,7 @@ def build_index(
     if resume and Path(paths.manifest).exists():
         manifest.update(json.loads(Path(paths.manifest).read_text()))
 
-    def stage(name: str, path: str, producer) -> DataFrame:
-        t0 = time.time()
-        if not (resume and _done(path)):
-            producer().write.mode("overwrite").parquet(path)
-            manifest["stages"][name] = {
-                "path": path,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-        else:
-            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
-            manifest["stages"][name]["resumed"] = True
-        return spark.read.parquet(path)
-
+    stage = stage_runner(spark, manifest, resume)
     # -- ingest parallelism: a handful of big input files must not
     # serialize the tokenize stage; spread to 2× total cores up front.
     # (capture cached-ness of the CALLER's relation first — the

@@ -1,141 +1,17 @@
-"""Packed-index MERGE — incremental corpus growth without a rebuild
-(north_rule: "posting-list construction, merge, compression, top-k").
-
-Merging two indexes built over disjoint doc_id sets produces an index
-bit-identical to one built over the union corpus, at a fraction of the
-cost: the expensive build shuffle (raw (term, doc) postings → packed
-segments) never reruns.  Merge cost is
-
-- one term-keyed join per side to realign term_ids (the packed rows are
-  ~1000× smaller than the raw posting stream they encode),
-- one (term_id, seg_id) repartition of packed rows,
-- a map-side decode/concat/re-encode kernel over the packed bytes.
-
-Why anything must be recomputed at all:
-
-- **term_ids** are dense lexical ranks over the vocabulary, so the
-  union vocabulary reassigns them (dictionaries realigned by term
-  string, df summed, idf recomputed from combined n_docs/df —
-  including the okapi md5-bucketed ε-fold, which depends only on the
-  merged (term, df) relation and so reproduces the rebuilt ε exactly).
-- **block/segment maxima** are upper bounds on tf_part, which depends
-  on the corpus-global avgdl — stale maxima from either source are NOT
-  safe bounds once avgdl moves, so every group's maxima are recomputed
-  (decode tfs/dls + vectorized arithmetic; no shuffle).
-- **shared (term, seg) groups** (both sides contribute docs to the
-  same docID window) are decoded, merged by doc_id and re-encoded; the
-  codec is deterministic, so single-side groups re-encode to the exact
-  bytes they already had.
-
-The reference has no index persistence at all (it pickles a scorer
-object per corpus — /root/reference/src/data_generator.py:186-199);
-merge is engine-native capability beyond it.
+"""Packed-index MERGE and UPSERT — incremental corpus growth without a
+rebuild (north_rule: "posting-list construction, merge, compression,
+top-k").  Both are thin wrappers over ``repack.repack``, which holds
+the one decode/re-pack kernel and the bit-identity argument: the
+result equals a fresh build over the union corpus, and the build's raw
+(term, doc) posting shuffle never reruns.
 """
 
 from __future__ import annotations
 
-import json
-import time
-from pathlib import Path
+from pyspark.sql import SparkSession
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from ..config import BM25Params, IndexParams
-from . import codec
-from .builder import (
-    POSTINGS_SCHEMA,
-    IndexPaths,
-    _done,
-    _pack_group,
-    dictionary_from_dfreq,
-    input_fingerprint,
-    write_lineage_and_metrics,
-)
-
-# manifest keys that must agree between the two source indexes for the
-# merged scores to be well-defined
-_COMPAT_KEYS = ("format_version", "eps_fold", "params")
-
-
-def _params_from_manifest(m: dict) -> IndexParams:
-    p = m["params"]
-    return IndexParams(
-        block_size=int(p["block_size"]),
-        segment_doc_window=int(p["segment_doc_window"]),
-        bm25=BM25Params(
-            k1=p["k1"], b=p["b"], delta=p["delta"],
-            variant=p["variant"], epsilon=p["epsilon"],
-        ),
-    )
-
-
-def _make_merge_fn(params: IndexParams, avgdl: float):
-    """mapInPandas kernel over packed rows hash-partitioned by
-    (term_id, seg_id) and sorted by (term_id, seg_id): decode each
-    group's arrays, concat-sort by doc_id (strictly increasing — a
-    duplicate doc_id across sources is a hard error), and re-pack with
-    maxima computed against the MERGED avgdl.  Groups are ≤ the number
-    of source indexes; a carry list stitches groups split across Arrow
-    batches."""
-    window = params.segment_doc_window
-
-    def pack_rows(open_rows: list) -> dict:
-        term_id, seg_id = open_rows[0][0], open_rows[0][1]
-        base = seg_id * window
-        ids = [codec.decode_docids(r[2], base) for r in open_rows]
-        tfs = [codec.decode_varint(r[3]).astype(np.int64) for r in open_rows]
-        dls = [codec.decode_varint(r[4]).astype(np.int64) for r in open_rows]
-        d = np.concatenate(ids)
-        t = np.concatenate(tfs)
-        l = np.concatenate(dls)
-        if len(open_rows) > 1:
-            order = np.argsort(d, kind="stable")
-            d, t, l = d[order], t[order], l[order]
-        if len(d) > 1 and not bool(np.all(np.diff(d) > 0)):
-            raise ValueError(
-                f"duplicate doc_id in merged group (term_id={term_id}, "
-                f"seg_id={seg_id}): source indexes must cover disjoint docs"
-            )
-        return _pack_group(term_id, seg_id, d, t, l, params, avgdl)
-
-    def merge(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        open_key, open_rows, out = None, [], []
-
-        def emit():
-            pdf = pd.DataFrame(out)
-            pdf["build_part"] = pid
-            return pdf
-
-        for pdf in batches:
-            for r in zip(
-                pdf["term_id"].to_numpy(np.int64),
-                pdf["seg_id"].to_numpy(np.int64),
-                pdf["doc_ids_enc"],
-                pdf["tfs_enc"],
-                pdf["dls_enc"],
-            ):
-                key = (int(r[0]), int(r[1]))
-                if key != open_key and open_rows:
-                    out.append(pack_rows(open_rows))
-                    open_rows = []
-                open_key = key
-                open_rows.append((int(r[0]), int(r[1]), bytes(r[2]), bytes(r[3]), bytes(r[4])))
-            if len(out) >= 256:
-                yield emit()
-                out = []
-        if open_rows:
-            out.append(pack_rows(open_rows))
-        if out:
-            yield emit()
-
-    return merge
+from .builder import IndexPaths
+from .repack import Source, repack
 
 
 def merge_indexes(
@@ -150,137 +26,12 @@ def merge_indexes(
     params, disjoint doc_ids) into a new index at ``out_dir`` that is
     bit-identical to a fresh build over the union corpus
     (tests/test_index_merge.py asserts table-level and score-level
-    equality)."""
-    pa, pb = IndexPaths(root_a), IndexPaths(root_b)
-    ma = json.loads(Path(pa.manifest).read_text())
-    mb = json.loads(Path(pb.manifest).read_text())
-    for key in _COMPAT_KEYS:
-        if ma.get(key) != mb.get(key):
-            raise ValueError(
-                f"incompatible indexes: {key} differs ({ma.get(key)!r} != {mb.get(key)!r})"
-            )
-    params = _params_from_manifest(ma)
-    paths = IndexPaths(out_dir)
-    n_docs = int(ma["n_docs"]) + int(mb["n_docs"])
-    total_tokens = int(ma["total_tokens"]) + int(mb["total_tokens"])
-    avgdl = float(total_tokens) / n_docs
-    input_fp = input_fingerprint(
-        "merge",
-        root_a, ma.get("n_docs"), ma.get("total_tokens"), ma.get("input_fp"),
-        root_b, mb.get("n_docs"), mb.get("total_tokens"), mb.get("input_fp"),
+    equality).  ``check_disjoint`` raises before the postings pass when
+    the sources share doc_ids; the kernel refuses them either way."""
+    return repack(
+        spark, [Source(root_a), Source(root_b)], out_dir,
+        {"merged_from": [root_a, root_b]}, resume, check_disjoint,
     )
-    manifest: dict = {
-        "format_version": ma["format_version"],
-        "eps_fold": ma["eps_fold"],
-        "params": ma["params"],
-        "stages": {},
-        "merged_from": [root_a, root_b],
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-        "input_fp": input_fp,
-    }
-    if resume and Path(paths.manifest).exists():
-        old = json.loads(Path(paths.manifest).read_text())
-        if old.get("input_fp") == input_fp:
-            # resume only timing bookkeeping — never the derived stats,
-            # which the old manifest would clobber with stale values
-            manifest["stages"] = old.get("stages", {})
-        else:
-            # different sources into the same out_dir: on-disk _done
-            # markers belong to another merge — recompute everything
-            resume = False
-
-    def stage(name: str, path: str, producer) -> DataFrame:
-        t0 = time.time()
-        if not (resume and _done(path)):
-            producer().write.mode("overwrite").parquet(path)
-            manifest["stages"][name] = {
-                "path": path,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-        else:
-            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
-            manifest["stages"][name]["resumed"] = True
-        return spark.read.parquet(path)
-
-    ds_a = spark.read.parquet(pa.docstats)
-    ds_b = spark.read.parquet(pb.docstats)
-    if check_disjoint:
-        dup = ds_a.join(ds_b, "doc_id", "left_semi").count()
-        if dup:
-            raise ValueError(
-                f"source indexes share {dup} doc_ids — merge requires disjoint docs"
-            )
-
-    docs_a = spark.read.parquet(pa.docs)
-    docs_b = spark.read.parquet(pb.docs)
-    # keep the UNION of columns (null-filled where a side lacks one) —
-    # a rebuild over the union corpus keeps every input column, so
-    # intersecting here would silently drop one-sided columns and break
-    # the merged == rebuilt contract for the docs table
-    stage(
-        "docs",
-        paths.docs,
-        lambda: docs_a.unionByName(docs_b, allowMissingColumns=True),
-    )
-    stage("docstats", paths.docstats, lambda: ds_a.unionByName(ds_b))
-
-    # -- dictionary: realign by term, sum df, recompute idf + term_ids
-    dict_a = spark.read.parquet(pa.dictionary)
-    dict_b = spark.read.parquet(pb.dictionary)
-
-    def make_dictionary():
-        dfreq = (
-            dict_a.select("term", F.col("df").alias("df_a"))
-            .join(dict_b.select("term", F.col("df").alias("df_b")), "term", "full")
-            .select(
-                "term",
-                (F.coalesce("df_a", F.lit(0)) + F.coalesce("df_b", F.lit(0))).alias("df"),
-            )
-        )
-        return dictionary_from_dfreq(dfreq, n_docs, params, total_tokens, out_dir)
-
-    dictionary = stage("dictionary", paths.dictionary, make_dictionary)
-    manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
-
-    # -- postings: remap term_ids through the term string, then re-pack
-    # maxima (and any shared (term, seg) groups) against the new avgdl
-    def make_postings():
-        new_map = dictionary.select("term", "term_id")
-
-        def remap(side_paths: IndexPaths, side_dict: DataFrame) -> DataFrame:
-            old_map = side_dict.select(F.col("term_id").alias("term_id_old"), "term")
-            return (
-                spark.read.parquet(side_paths.postings)
-                .withColumnRenamed("term_id", "term_id_old")
-                .join(old_map, "term_id_old")
-                .join(new_map, "term")
-                .select(
-                    "term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc"
-                )
-            )
-
-        both = remap(pa, dict_a).unionByName(remap(pb, dict_b))
-        # range-partition the PRE-kernel packed rows: one exchange, the
-        # decode-merge-re-encode kernel runs once, and the output is
-        # already term_id-clustered for parquet min/max pruning.  The
-        # former hash-repartition → kernel → repartitionByRange shape
-        # paid a second exchange AND ran the kernel twice (the range
-        # partitioner samples its child plan); sampling now re-runs only
-        # the map-side remap joins (guide §2.4).
-        return (
-            both.repartitionByRange(
-                max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
-            )
-            .sortWithinPartitions("term_id", "seg_id")
-            .mapInPandas(_make_merge_fn(params, avgdl), POSTINGS_SCHEMA)
-        )
-
-    stage("postings", paths.postings, make_postings)
-    write_lineage_and_metrics(spark, paths, manifest, resume)
-    return paths
 
 
 def upsert_index(
@@ -290,39 +41,16 @@ def upsert_index(
     out_dir: str,
     resume: bool = True,
 ) -> IndexPaths:
-    """UPSERT = delete ∘ merge: documents present in both indexes take
-    the DELTA's version (re-ingested/updated docs), everything else
-    unions.  Composition of the two bit-identical primitives, so the
-    result equals a fresh build over (base − overlap) ∪ delta
-    (tests/test_index_merge.py::test_upsert_parity).
-
-    Overlapping doc_ids never touch the driver: the docstats semi-join
-    feeds the distributed DataFrame delete path directly (r5's
-    no-collect kernel — per-segment sorted id lists, order-independent
-    digest), so a 1e8-doc delta scales by adding executors.  Two
-    packed-row passes (prune, then merge) — still no raw posting
-    shuffle.  The intermediate pruned base index
-    is deleted once the merge succeeds (it is a full index copy);
-    re-running the same upsert therefore re-prunes, and a DIFFERENT
-    upsert into the same out_dir is caught by the manifest
-    ``input_fp`` guard rather than reusing stale artifacts."""
-    import shutil
-
-    from .delete import delete_docs
-
-    pb = IndexPaths(base_root)
-    pd_ = IndexPaths(delta_root)
-    overlap_df = (
-        spark.read.parquet(pb.docstats)
-        .join(spark.read.parquet(pd_.docstats), "doc_id", "left_semi")
-        .select("doc_id")
+    """UPSERT: documents present in both indexes take the DELTA's
+    version (re-ingested/updated docs), everything else unions — one
+    repack of (base − delta's doc_ids) ∪ delta, equal to a fresh build
+    over (base − overlap) ∪ delta (tests/test_index_merge.py::
+    test_upsert_parity).  The delta's doc_ids never touch the driver:
+    they are sort-merge-joined to the base as per-segment lists, and no
+    intermediate index is written.  The two sources are disjoint by
+    construction, so only the kernel's duplicate guard runs."""
+    delta_ids = spark.read.parquet(IndexPaths(delta_root).docstats).select("doc_id")
+    return repack(
+        spark, [Source(base_root, delta_ids), Source(delta_root)], out_dir,
+        {"upserted_from": [base_root, delta_root]}, resume, check_disjoint=False,
     )
-    n_overlap = overlap_df.count()
-    pruned_root = base_root
-    if n_overlap:
-        pruned_root = out_dir.rstrip("/") + ".base_pruned"
-        delete_docs(spark, base_root, overlap_df, pruned_root, resume=resume)
-    result = merge_indexes(spark, pruned_root, delta_root, out_dir, resume=resume)
-    if n_overlap:
-        shutil.rmtree(pruned_root, ignore_errors=True)
-    return result

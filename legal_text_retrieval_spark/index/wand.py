@@ -6,7 +6,7 @@ Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
             → broadcast-join dictionary → (query_id, term_id, qtf, idf)
     postings.filter(term_id ∈ query terms)      ← parquet min/max pruning
             → broadcast-join query terms
-            → groupBy(query_id, seg_id).applyInPandas(WAND kernel)
+            → (query_id, seg_id) runs → mapInPandas(WAND kernel)
             → global window top-k merge → + per-query δ-constant
             → δ-padding for queries with < k matched docs
 
@@ -66,8 +66,8 @@ class FulltextIndex:
 
     # manifest invariants an index must carry to be scored correctly:
     # eps_fold (okapi ε provenance) and the current format_version
-    # (min_idf + block-max layout).  merge.py guards the same keys
-    # pairwise (_COMPAT_KEYS); load guards them absolutely.  The value
+    # (min_idf + block-max layout).  repack.py guards the same keys
+    # across sources (_COMPAT_KEYS); load guards them absolutely.  The value
     # is builder.FORMAT_VERSION — the writer's constant — so a layout
     # bump cannot leave readers accepting stale indexes (or rejecting
     # fresh ones).
@@ -159,11 +159,9 @@ class FulltextIndex:
 def _make_group_fn(
     params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
 ):
-    """The per-(qid, segment) WAND evaluation on raw arrays — shared by
-    the applyInPandas kernel (kept for the property tests) and the
-    streaming mapInPandas kernel, so both are the same math bit for
-    bit.  ``rows`` fields must already be in ascending term_id order
-    (fold order == lexical term order)."""
+    """The per-(qid, segment) WAND evaluation on raw arrays, run by the
+    streaming mapInPandas kernel.  ``rows`` fields must already be in
+    ascending term_id order (fold order == lexical term order)."""
     p = params
     bs = block_size
 
@@ -244,8 +242,8 @@ def _make_group_fn(
 
 
 def _group_arrays(pdf: pd.DataFrame):
-    """Column extraction shared by both kernels (pdf already in
-    ascending term_id order)."""
+    """Column extraction for one group (pdf already in ascending
+    term_id order)."""
     qtf = pdf["qtf"].to_numpy(np.float64)
     idf = pdf["idf"].to_numpy(np.float64)
     segmax = pdf["seg_max_tfpart"].to_numpy(np.float64)
@@ -254,38 +252,14 @@ def _group_arrays(pdf: pd.DataFrame):
     return qtf, idf, segmax, blocks, bufs
 
 
-def _make_kernel(
-    params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
-):
-    """applyInPandas form (one call per (qid, seg_id) group)."""
-    group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["qid"].iloc[0]
-        seg_id = int(pdf["seg_id"].iloc[0])
-        pdf = pdf.sort_values("term_id")  # fold order == lexical term order
-        res = group_topk(seg_id, *_group_arrays(pdf))
-        if res is None:
-            return pd.DataFrame(
-                {"qid": pd.Series([], dtype=str), "doc_id": [], "ms": [], "n_cand": []}
-            ).astype({"doc_id": "int64", "ms": "float64", "n_cand": "int64"})
-        ids, scores, n_cand = res
-        return pd.DataFrame(
-            {"qid": qid, "doc_id": ids, "ms": scores, "n_cand": np.int64(n_cand)}
-        )
-
-    return kernel
-
-
 def _make_stream_kernel(
     params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
 ):
-    """mapInPandas form: the joined relation arrives hash-partitioned
+    """mapInPandas kernel: the joined relation arrives hash-partitioned
     by (qid, seg_id) and sorted by (qid, seg_id, term_id), so groups
     are contiguous runs; a carry buffer stitches runs spanning Arrow
-    batch boundaries.  Identical math to the applyInPandas kernel (the
-    shared _make_group_fn), but without Spark's per-group overhead —
-    the same streaming-runs trick the posting pack kernel uses
+    batch boundaries.  No per-group Spark overhead — the same
+    streaming-runs trick the posting pack kernel uses
     (builder._make_pack_fn)."""
     group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
 

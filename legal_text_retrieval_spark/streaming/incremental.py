@@ -1,43 +1,50 @@
 """Incremental index maintenance with Structured Streaming.
 
-The batch build (index/builder.py) is the source of truth; this module
-keeps an index fresh as new corpus files land, Lucene-style:
-
-- ``readStream`` over the corpus directory → ``foreachBatch``;
-- each micro-batch packs its OWN posting segments (same codec, same
-  layout) and appends them under ``postings/`` as a new *generation* —
-  no rewrite of existing segments, so the stream only ever appends;
-- new terms are appended to the dictionary with ids above the current
-  max (existing term_ids are immutable);
-- doc stats are appended; global scalars (N, avgdl, idf) are
-  snapshotted in the manifest and refreshed by ``compact()`` — between
-  compactions, queries score with the last snapshot's statistics
-  (standard trade-off for incremental inverted indexes; exactness is
-  restored by a compaction, which tests verify).
-
-Checkpointing/restart comes free from Structured Streaming's
-checkpoint dir (north_rule resumability on the streaming path).
+``start_incremental`` watches a corpus directory and appends each
+micro-batch to an existing index as a new posting *generation* (same
+codec and layout, packed against the manifest's snapshot avgdl); new
+terms get ids above the current max with an ``idf=0`` placeholder.
+``compact_merged`` restores batch exactness with one ``repack`` of the
+index (index/repack.py) and swaps it into place.  Checkpointing and
+restart come from Structured Streaming's checkpoint dir.
 """
 
 from __future__ import annotations
 
 import json
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import IndexParams
-from ..index.builder import POSTINGS_SCHEMA, IndexPaths, _make_pack_fn
+from ..index.builder import (
+    DISTRIBUTED_TERMID_THRESHOLD,
+    POSTINGS_SCHEMA,
+    IndexPaths,
+    _make_pack_fn,
+    assign_term_ids,
+    params_from_manifest,
+)
+from ..index.repack import Source, repack
 from ..operators import stats as ops_stats
 
 
-def _append_batch(
-    batch: DataFrame, paths: IndexPaths, params: IndexParams, text_col: str
-) -> None:
+def _check_params(paths: IndexPaths, params: IndexParams) -> None:
+    """The caller's params must be the ones the index at ``paths`` was
+    built with, or block maxima would stop bounding the scorer recorded
+    in its manifest."""
+    on_disk = params_from_manifest(json.loads(Path(paths.manifest).read_text()))
+    if params != on_disk:
+        raise ValueError(f"incompatible params: caller {params} != index {on_disk}")
+
+
+def _append_batch(batch: DataFrame, paths: IndexPaths, text_col: str) -> None:
     spark = batch.sparkSession
     manifest = json.loads(Path(paths.manifest).read_text())
-    avgdl = manifest["avgdl"]  # snapshot stats (refreshed at compact())
+    params = params_from_manifest(manifest)
+    avgdl = manifest["avgdl"]  # snapshot stats (refreshed at compaction)
 
     batch = batch.select("doc_id", text_col).withColumn(
         "content_sha", F.sha2(F.col(text_col), 256)
@@ -52,16 +59,12 @@ def _append_batch(
     max_id = dictionary.agg(F.max("term_id")).collect()[0][0]
     terms = ops_stats.document_frequencies(batch, text_col)
     new_terms = terms.join(dictionary.select("term"), "term", "left_anti")
-    if new_terms.count() > 0:
-        from pyspark.sql import Window
-
-        w = Window.orderBy("term")
-        add = new_terms.withColumn(
-            "term_id", (F.row_number().over(w) + F.lit(max_id)).cast("long")
-        ).withColumn("idf", F.lit(0.0))  # refreshed at compact()
-        add.select(*[c for c in dictionary.columns]).write.mode("append").parquet(
-            paths.dictionary
-        )
+    n_new = new_terms.count()
+    if n_new:
+        add = assign_term_ids(new_terms, distributed=n_new > DISTRIBUTED_TERMID_THRESHOLD)
+        add.withColumn("term_id", F.col("term_id") + F.lit(max_id + 1)).withColumn(
+            "idf", F.lit(0.0)  # refreshed at compaction
+        ).select(*dictionary.columns).write.mode("append").parquet(paths.dictionary)
         dictionary = spark.read.parquet(paths.dictionary)
 
     tf = ops_stats.term_frequencies(batch, text_col)
@@ -91,22 +94,22 @@ def start_incremental(
     schema=None,
 ):
     """Start the file-watch stream; returns the StreamingQuery.
-    The index at ``index_root`` must already exist (batch-built)."""
+    The index at ``index_root`` must already exist (batch-built) with
+    the same ``params``."""
     paths = IndexPaths(index_root)
+    _check_params(paths, params)
     src = spark.readStream.schema(
         schema or spark.read.parquet(watch_dir).schema
     ).parquet(watch_dir)
     return (
         src.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda b, _eid: _append_batch(b, paths, params, text_col))
+        .foreachBatch(lambda b, _eid: _append_batch(b, paths, text_col))
         .trigger(availableNow=True)
         .start()
     )
 
 
 def _swap_into_place(spark: SparkSession, index_root: str, tmp_root: str) -> IndexPaths:
-    import shutil
-
     backup = index_root.rstrip("/") + ".old"
     shutil.rmtree(backup, ignore_errors=True)
     Path(index_root).rename(backup)
@@ -123,106 +126,21 @@ def _swap_into_place(spark: SparkSession, index_root: str, tmp_root: str) -> Ind
     return paths
 
 
-def compact(spark: SparkSession, index_root: str, params: IndexParams, text_col: str = "content"):
-    """Full-exactness restore by REBUILD: global stats + idf + repack
-    from the accumulated raw docs (a batch build over the union).
-    Kept as the compaction oracle; ``compact_merged`` below produces
-    the bit-identical result without the build shuffle and is the one
-    to run at scale."""
-    from ..index.builder import build_index
-
-    paths = IndexPaths(index_root)
-    docs = spark.read.parquet(paths.docs).select("doc_id", text_col)
-    tmp_root = index_root.rstrip("/") + ".compact"
-    build_index(spark, docs, tmp_root, params, text_col=text_col, resume=False)
-    return _swap_into_place(spark, index_root, tmp_root)
-
-
 def compact_merged(spark: SparkSession, index_root: str, params: IndexParams):
-    """Exactness-restoring compaction WITHOUT the build shuffle — the
-    merge kernel (index/merge.py) generalized to one postings dir
-    holding base + streamed generations:
-
-    - exact n_docs/total_tokens/avgdl from ONE docstats scan (the
-      appended stats are already on disk);
-    - df per term from the packed rows themselves (Σ n_docs over a
-      term's segment rows — docs are disjoint across generations, a
-      duplicate is a hard kernel error);
-    - dictionary re-ranked to dense lexical term_ids (streamed terms
-      were appended above max_id; a rebuild would rank them lexically)
-      with idf + okapi ε-fold recomputed, fixing the idf=0
-      placeholders;
-    - one decode-merge-re-encode pass over the packed rows, maxima
-      recomputed against the exact avgdl (delta generations were
-      packed against snapshot stats — their stored maxima are ignored).
-
-    Never touches the raw (term, doc) posting stream: compaction cost
-    is O(packed bytes), not O(corpus tokenize+shuffle).  Bit-identical
-    to ``compact`` (tests/test_streaming_incremental.py)."""
-    import shutil
-
-    from ..index.builder import (
-        dictionary_from_dfreq,
-        write_lineage_and_metrics,
-    )
-    from ..index.merge import _make_merge_fn
-
-    paths = IndexPaths(index_root)
-    old_manifest = json.loads(Path(paths.manifest).read_text())
+    """Exactness-restoring compaction without the build shuffle: one
+    ``repack`` of the index's base + streamed generations (exact
+    n_docs/avgdl from the appended docstats, df from the packed rows,
+    dense lexical term_ids replacing the appended ones, idf=0
+    placeholders recomputed, maxima against the exact avgdl), then a
+    swap into place.  ``params`` must be the index's own.  Bit-identical
+    to a rebuild over the accumulated docs
+    (tests/test_streaming_incremental.py)."""
+    _check_params(IndexPaths(index_root), params)
     tmp_root = index_root.rstrip("/") + ".compact"
-    out = IndexPaths(tmp_root)
     shutil.rmtree(tmp_root, ignore_errors=True)
-    Path(tmp_root).mkdir(parents=True)
-
-    ds = spark.read.parquet(paths.docstats)
-    n_docs, total_tokens = ds.agg(F.count("*"), F.sum("dl")).collect()[0]
-    n_docs, total_tokens = int(n_docs), int(total_tokens)
-    avgdl = float(total_tokens) / n_docs
-    manifest: dict = {
-        "format_version": old_manifest["format_version"],
-        "eps_fold": old_manifest["eps_fold"],
-        "params": old_manifest["params"],
-        "stages": {},
-        "compacted_from": index_root,
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-    }
-    # docs/docstats are already the union on disk — copy verbatim
-    shutil.copytree(paths.docs, out.docs)
-    shutil.copytree(paths.docstats, out.docstats)
-
-    postings_all = spark.read.parquet(paths.postings)
-    old_dict = spark.read.parquet(paths.dictionary)
-    old_map = old_dict.select(F.col("term_id").alias("term_id_old"), "term")
-    dfreq = (
-        postings_all.groupBy("term_id")
-        .agg(F.sum("n_docs").alias("df"))
-        .withColumnRenamed("term_id", "term_id_old")
-        .join(old_map, "term_id_old")
-        .select("term", "df")
-    )
-    dictionary = dictionary_from_dfreq(dfreq, n_docs, params, total_tokens, tmp_root)
-    dictionary.write.mode("overwrite").parquet(out.dictionary)
-    dictionary = spark.read.parquet(out.dictionary)
-    manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
-
-    remapped = (
-        postings_all.withColumnRenamed("term_id", "term_id_old")
-        .join(old_map, "term_id_old")
-        .join(dictionary.select("term", "term_id"), "term")
-        .select("term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc")
-    )
-    # range-partition BEFORE the merge kernel: one exchange, kernel runs
-    # once (the former post-kernel repartitionByRange re-executed it via
-    # range-boundary sampling), output term_id-clustered (guide §2.4)
-    packed = (
-        remapped.repartitionByRange(
-            max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
-        )
-        .sortWithinPartitions("term_id", "seg_id")
-        .mapInPandas(_make_merge_fn(params, avgdl), POSTINGS_SCHEMA)
-    )
-    packed.write.mode("overwrite").parquet(out.postings)
-    write_lineage_and_metrics(spark, out, manifest, resume=False)
+    # compaction leaves the docs/docstats rows as they are: copy their
+    # files verbatim, and repack resumes past those two stages
+    for table in ("docs", "docstats"):
+        shutil.copytree(f"{index_root}/{table}", f"{tmp_root}/{table}")
+    repack(spark, [Source(index_root)], tmp_root, {"compacted_from": index_root})
     return _swap_into_place(spark, index_root, tmp_root)

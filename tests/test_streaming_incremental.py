@@ -14,6 +14,18 @@ from legal_text_retrieval_spark.streaming import incremental
 PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
 
 
+def compact(spark, index_root: str, params: IndexParams, text_col: str = "content"):
+    """Compaction oracle: full-exactness restore by REBUILD (a batch
+    build over the accumulated raw docs), swapped into place.
+    ``incremental.compact_merged`` must produce the same index without
+    the build shuffle."""
+    paths = builder.IndexPaths(index_root)
+    docs = spark.read.parquet(paths.docs).select("doc_id", text_col)
+    tmp_root = index_root.rstrip("/") + ".compact"
+    builder.build_index(spark, docs, tmp_root, params, text_col=text_col, resume=False)
+    return incremental._swap_into_place(spark, index_root, tmp_root)
+
+
 def test_stream_append_then_compact(spark, tiny_corpus_pdf, tmp_path):
     base_pdf = tiny_corpus_pdf.iloc[:150].copy()
     base_pdf.insert(0, "doc_id", range(150))
@@ -66,7 +78,7 @@ def test_stream_append_then_compact(spark, tiny_corpus_pdf, tmp_path):
     shutil.copytree(root, root2)
 
     # compaction restores exact batch semantics
-    incremental.compact(spark, root, PARAMS)
+    compact(spark, root, PARAMS)
     incremental.compact_merged(spark, root2, PARAMS)
 
     import json

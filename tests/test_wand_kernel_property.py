@@ -12,7 +12,7 @@ from hypothesis import strategies as st
 
 from legal_text_retrieval_spark.config import BM25Params
 from legal_text_retrieval_spark.index import codec
-from legal_text_retrieval_spark.index.wand import _make_kernel
+from legal_text_retrieval_spark.index.wand import _make_stream_kernel
 
 PARAMS = BM25Params(k1=1.2)
 WINDOW = 256
@@ -58,9 +58,14 @@ def test_pruned_equals_exhaustive(seed, n_terms, k):
         _segment_row(rng, term_id=t, seg_id=5, n_docs=int(rng.integers(1, WINDOW)))
         for t in range(n_terms)
     ]
-    pdf = pd.DataFrame(rows)
-    out_prune = _make_kernel(PARAMS, AVGDL, WINDOW, k, prune=True, block_size=BLOCK)(pdf.copy())
-    out_exh = _make_kernel(PARAMS, AVGDL, WINDOW, k, prune=False, block_size=BLOCK)(pdf.copy())
+    pdf = pd.DataFrame(rows)  # one (qid, seg_id) group, rows in term_id order
+
+    def run(prune):
+        kernel = _make_stream_kernel(PARAMS, AVGDL, WINDOW, k, prune=prune, block_size=BLOCK)
+        return pd.concat(list(kernel(iter([pdf.copy()]))), ignore_index=True)
+
+    out_prune = run(True)
+    out_exh = run(False)
     assert out_prune["doc_id"].tolist() == out_exh["doc_id"].tolist()
     assert (
         out_prune["ms"].to_numpy().view("int64") == out_exh["ms"].to_numpy().view("int64")
