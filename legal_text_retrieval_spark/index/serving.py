@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -69,12 +70,19 @@ def system_memory_budget() -> int:
 _SHARD_SERVER: "LocalIndexServer | None" = None
 
 
+def _best(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the k best rows by (score DESC, doc_id DESC) — the
+    engine's argsort-parity order (bm25.topk), the one ranking rule of
+    both serving paths."""
+    return np.lexsort((ids, scores))[::-1][:k]
+
+
 def _shard_topk(args):
     """Worker body: dense accumulation over one census slice, then the
-    slice's top-k by the same (score, doc_id) lexsort rule as
-    ``LocalIndexServer.query``.  Pure numpy over fork-inherited arrays
-    — no py4j, no imports, no writes to shared pages."""
-    s, S, terms, k = args
+    slice's top-k of qconst + ms by :func:`_best`.  Pure numpy over
+    fork-inherited arrays — no py4j, no imports, no writes to shared
+    pages."""
+    s, S, terms, qconst, k = args
     srv = _SHARD_SERVER
     census = srv.all_doc_ids
     size = len(census)
@@ -89,13 +97,9 @@ def _shard_topk(args):
         sl = tp.slots[i0:i1] - lo
         score[sl] += w * tp.contribs[i0:i1]
         matched[sl] = True
-    cand_ids = census[lo:hi][matched]
-    cand_ms = score[matched]
-    n = len(cand_ids)
-    if n > k:
-        order = np.lexsort((cand_ids, cand_ms))[-k:]
-        cand_ids, cand_ms = cand_ids[order], cand_ms[order]
-    return n, cand_ids, cand_ms
+    ids, scores = census[lo:hi][matched], qconst + score[matched]
+    sel = _best(ids, scores, k)
+    return ids[sel], scores[sel]
 
 
 class LocalIndexServer:
@@ -106,6 +110,25 @@ class LocalIndexServer:
         self.term_idf: dict[str, float] = {}
         self.term_post: dict[str, _TermPostings] = {}
         self.all_doc_ids: np.ndarray | None = None
+
+    def _query_weights(self, query_text: str) -> tuple[float, list[tuple[str, float]]]:
+        """(qconst, [(term, qtf·idf)]) of one query: the δ constant
+        folded over all occurrences in term order (the engine fold; 0
+        for okapi) and its in-vocabulary non-zero-idf terms in
+        ascending term order (== term_id order, the kernel's)."""
+        qtf = Counter(ws_split(standardize_data(query_text)))
+        qconst = 0.0
+        if self.params.variant == "plus":
+            acc = 0.0
+            for t in sorted(qtf):
+                acc += qtf[t] * self.term_idf.get(t, 0.0)
+            qconst = self.params.delta * acc
+        terms = [
+            (t, float(qtf[t]) * self.term_idf[t])
+            for t in sorted(qtf)
+            if self.term_idf.get(t, 0.0) != 0.0
+        ]
+        return qconst, terms
 
     @staticmethod
     def resident_estimate(manifest: dict) -> int:
@@ -181,16 +204,6 @@ class LocalIndexServer:
         for r in dict_rows:
             srv.term_idf[r.term] = r.idf
             id2term[r.term_id] = r.term
-        # same global switch as wand.query_topk's negative_weights: with
-        # a negative okapi ε floor, pads can outrank matched for EVERY
-        # query (including exact qconst ties), so padding keys off the
-        # dictionary minimum, not a per-query score heuristic
-        srv.has_negative_idf = (
-            params.variant == "okapi"
-            and bool(srv.term_idf)
-            and min(srv.term_idf.values()) < 0
-        )
-
         parts: dict[str, list] = {}
         for r in (
             spark.read.parquet(paths.postings)
@@ -233,20 +246,7 @@ class LocalIndexServer:
         """[(doc_id, score)] rank order — identical semantics to
         wand.query_topk (term-ordered accumulation, δ constant,
         argsort-parity ties, δ-padding)."""
-        p = self.params
-        toks = ws_split(standardize_data(query_text))
-        qtf: dict[str, int] = {}
-        for t in toks:
-            qtf[t] = qtf.get(t, 0) + 1
-
-        # δ constant folded in term order (matches the engine fold)
-        qconst = 0.0
-        if p.variant == "plus":
-            acc = 0.0
-            for t in sorted(qtf):
-                acc += qtf[t] * self.term_idf.get(t, 0.0)
-            qconst = p.delta * acc
-
+        qconst, terms = self._query_weights(query_text)
         # dense scatter-add accumulation: per doc the additions happen
         # in ascending term order (same fold as the WAND kernel →
         # bit-identical scores), but each term costs O(postings)
@@ -257,50 +257,24 @@ class LocalIndexServer:
         size = len(self.all_doc_ids)
         score = np.zeros(size, dtype=np.float64)
         matched = np.zeros(size, dtype=bool)
-        for t in sorted(qtf):  # == term_id order (lexical dictionary)
+        for t, w in terms:
             tp = self.term_post.get(t)
-            idf = self.term_idf.get(t, 0.0)
-            if tp is None or idf == 0.0:
+            if tp is None:
                 continue
-            w = float(qtf[t]) * idf
             score[tp.slots] += w * tp.contribs  # doc_ids unique per term
             matched[tp.slots] = True
-        cand_ids = self.all_doc_ids[matched]
-        cand_ms = score[matched]
-
-        n = len(cand_ids)
-        # δ-padding: unmatched docs score exactly qconst, and only the
-        # k highest unmatched ids can ever place.  Pads join the
-        # candidate pool whenever they could outrank a matched row —
-        # deficit (n < k) or negative weights (okapi ε < 0 → matched
-        # can score below qconst); the union then ranks on the FULL
-        # score (qconst + ms vs qconst), exactly like the distributed
-        # pad-query window.  The no-pad fast path ranks on raw ms (the
-        # distributed matched window) — adding the constant only after
-        # selection, so no tie can be manufactured by the addition.
-        need_pads = n < k or getattr(self, "has_negative_idf", False)
-        if not need_pads:
-            order = np.lexsort((cand_ids, cand_ms))
-            sel = order[-min(k, n):][::-1]
-            return [(int(cand_ids[i]), qconst + float(cand_ms[i])) for i in sel]
-
-        cand_scores = qconst + cand_ms
-        matched_set = set(cand_ids.tolist())
-        pad_ids = []
-        for d in self.all_doc_ids[::-1]:
-            if len(pad_ids) == k:
-                break
-            if int(d) not in matched_set:
-                pad_ids.append(int(d))
-        if pad_ids:
-            cand_ids = np.concatenate([cand_ids, np.array(pad_ids, dtype=np.int64)])
-            cand_scores = np.concatenate(
-                [cand_scores, np.full(len(pad_ids), qconst, dtype=np.float64)]
-            )
-        k_loc = min(k, len(cand_ids))
-        order = np.lexsort((cand_ids, cand_scores))
-        sel = order[-k_loc:][::-1]
-        return [(int(cand_ids[i]), float(cand_scores[i])) for i in sel]
+        # δ-padding: unmatched docs all score exactly qconst, and only
+        # the k highest unmatched ids can ever place — they sit among
+        # the last k + n census slots.  They always join the candidates
+        # (≤ k rows), so one ranking of qconst + ms and the pads covers
+        # deficits, k-th scores equal to qconst and negative weights
+        # alike — the order bm25.topk_padded gives the index path.
+        n = int(matched.sum())
+        lo = max(0, size - k - n)
+        pads = lo + np.flatnonzero(~matched[lo:])[-k:]
+        ids = np.concatenate([self.all_doc_ids[matched], self.all_doc_ids[pads]])
+        scores = np.concatenate([qconst + score[matched], np.full(len(pads), qconst)])
+        return [(int(ids[i]), float(scores[i])) for i in _best(ids, scores, k)]
 
     # ------------------------------------------------------------------
     # sharded serving: doc-partition scatter-gather inside one node
@@ -364,40 +338,22 @@ class LocalIndexServer:
         self.stop_workers()
 
     def query_sharded(self, query_text: str, k: int) -> list[tuple[int, float]]:
-        """``query`` semantics, computed by the forked shard pool.
-        Deficit (< k matches) and negative-idf padding are decided from
-        the shards' matched counts and served by the sequential path —
-        rare at the scales where sharding matters, and bit-identity is
-        then trivial."""
+        """``query`` semantics, computed by the forked shard pool.  When
+        a pad could place — fewer than k matched docs, or a k-th score
+        that does not beat qconst (ties, negative weights) — the query
+        is served by the sequential path instead: rare at the scales
+        where sharding matters, and bit-identity is then trivial."""
         if getattr(self, "_pool", None) is None:
             raise RuntimeError("call start_workers(n) first")
-        p = self.params
-        toks = ws_split(standardize_data(query_text))
-        qtf: dict[str, int] = {}
-        for t in toks:
-            qtf[t] = qtf.get(t, 0) + 1
-        qconst = 0.0
-        if p.variant == "plus":
-            acc = 0.0
-            for t in sorted(qtf):
-                acc += qtf[t] * self.term_idf.get(t, 0.0)
-            qconst = p.delta * acc
-        terms = [
-            (t, float(qtf[t]) * self.term_idf[t])
-            for t in sorted(qtf)
-            if t in self.term_idf and self.term_idf[t] != 0.0
-        ]
-
+        qconst, terms = self._query_weights(query_text)
         S = self._n_workers
-        parts = self._pool.map(_shard_topk, [(s, S, terms, k) for s in range(S)])
-        n_matched = sum(n for n, _, _ in parts)
-        if n_matched < k or getattr(self, "has_negative_idf", False):
+        parts = self._pool.map(_shard_topk, [(s, S, terms, qconst, k) for s in range(S)])
+        ids = np.concatenate([p[0] for p in parts])
+        scores = np.concatenate([p[1] for p in parts])
+        sel = _best(ids, scores, k)
+        if len(sel) < k or scores[sel[-1]] <= qconst:
             return self.query(query_text, k)
-        cand_ids = np.concatenate([ids for _, ids, _ in parts])
-        cand_ms = np.concatenate([ms for _, _, ms in parts])
-        order = np.lexsort((cand_ids, cand_ms))
-        sel = order[-min(k, len(cand_ids)):][::-1]
-        return [(int(cand_ids[i]), qconst + float(cand_ms[i])) for i in sel]
+        return [(int(ids[i]), float(scores[i])) for i in sel]
 
     def query_parents(self, query_text: str, k: int, sharded: bool = False) -> list[int]:
         """Top-k over a chunked-corpus index (operators.chunk.

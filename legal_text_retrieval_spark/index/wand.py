@@ -7,8 +7,8 @@ Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
     postings.filter(term_id ∈ query terms)      ← parquet min/max pruning
             → broadcast-join query terms
             → (query_id, seg_id) runs → mapInPandas(WAND kernel)
-            → global window top-k merge → + per-query δ-constant
-            → δ-padding for queries with < k matched docs
+            → score = per-query δ-constant + ms (rounded if asked)
+            → bm25.topk_padded: window top-k + δ-padding
 
 The kernel is Arrow-vectorized NumPy; it prunes at block granularity
 using (block_first, block_last, block_max_tfpart) metadata and is
@@ -20,9 +20,11 @@ using (block_first, block_last, block_max_tfpart) metadata and is
 - any decoded block's docs all become candidates, and blocks
   intersecting candidates are always decoded, so a surviving doc's
   score is complete;
-- a block is skipped only when block_ub + remaining-terms-ub < θ
-  (θ = current k-th partial score), which proves every doc first seen
-  in it can never reach the true top-k.
+- a block is skipped only when block_ub + remaining-terms-ub < θ −
+  slack (θ = current k-th partial score), which proves every doc first
+  seen in it can never reach the true top-k.  slack = 2·10^-r when the
+  scores are rounded to r decimals (a doc that ties the k-th only
+  after rounding must survive), else 0.
 
 Correctness-fallback ``mode="exhaustive"`` decodes everything; tests
 assert bitwise equality of the two modes (SURVEY.md §5.3).
@@ -36,7 +38,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -157,19 +159,29 @@ class FulltextIndex:
 
 
 def _make_group_fn(
-    params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
+    params: BM25Params,
+    avgdl: float,
+    window: int,
+    k: int,
+    prune: bool,
+    block_size: int = 128,
+    slack: float = 0.0,
 ):
     """The per-(qid, segment) WAND evaluation on raw arrays, run by the
     streaming mapInPandas kernel.  ``rows`` fields must already be in
-    ascending term_id order (fold order == lexical term order)."""
+    ascending term_id order (fold order == lexical term order).
+    ``slack`` widens both the block-skip bound and the emitted set: a
+    doc within ``slack`` of the k-th may still tie it once the final
+    scores are rounded, so it must be scored and emitted."""
     p = params
     bs = block_size
 
     def group_topk(seg_id, qtf_arr, idf_arr, segmax_arr, blocks, bufs):
         """blocks[i] = (block_first, block_last, block_max) lists;
         bufs[i] = (doc_ids_enc, tfs_enc, dls_enc).  Returns
-        (doc_ids, scores, n_cand) of the segment-local top-k, or None
-        when no candidate survives.
+        (doc_ids, scores, n_cand) of the segment-local top-k (plus the
+        rows within ``slack`` of its k-th), or None when no candidate
+        survives.
 
         Dense window-local accumulator (the serving-mode scatter-add
         trick, index/serving.py): scores/seen are arrays indexed by
@@ -192,7 +204,7 @@ def _make_group_fn(
             rem_after = rem_ub - seg_ubs[i]
             rem_ub = rem_after
             theta = (
-                float(np.partition(scores[seen], n_seen - k)[n_seen - k])
+                float(np.partition(scores[seen], n_seen - k)[n_seen - k]) - slack
                 if prune and n_seen >= k
                 else -np.inf
             )
@@ -235,6 +247,9 @@ def _make_group_fn(
         cand_scores = scores[seen]
         k_loc = min(k, n_seen)
         order = np.lexsort((cand_ids, cand_scores))  # asc score, asc doc_id
+        if slack:
+            asc = cand_scores[order]
+            k_loc = n_seen - int(np.searchsorted(asc, asc[-k_loc] - slack))
         sel = order[-k_loc:][::-1]  # desc score, desc doc_id among ties
         return cand_ids[sel], cand_scores[sel], n_seen
 
@@ -253,7 +268,13 @@ def _group_arrays(pdf: pd.DataFrame):
 
 
 def _make_stream_kernel(
-    params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
+    params: BM25Params,
+    avgdl: float,
+    window: int,
+    k: int,
+    prune: bool,
+    block_size: int = 128,
+    slack: float = 0.0,
 ):
     """mapInPandas kernel: the joined relation arrives hash-partitioned
     by (qid, seg_id) and sorted by (qid, seg_id, term_id), so groups
@@ -261,7 +282,7 @@ def _make_stream_kernel(
     batch boundaries.  No per-group Spark overhead — the same
     streaming-runs trick the posting pack kernel uses
     (builder._make_pack_fn)."""
-    group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
+    group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size, slack)
 
     def kernel(batches):
         carry: pd.DataFrame | None = None
@@ -320,17 +341,17 @@ def query_topk(
     score_round: int | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, rank, score) — rank-identical to the
-    reference scorer (argsort-parity tie-break, δ-padding for queries
-    with fewer than k matching docs)."""
-    from ..functions.numeric import round_sql
-    from ..operators.bm25 import query_term_occurrences
+    reference scorer (argsort-parity tie-break, δ-padding through
+    ``bm25.topk_padded``).  With ``score_round`` it ranks on the rounded
+    score it returns, exactly like ``bm25.bm25_topk``."""
+    from ..operators import bm25
 
     spark = index.spark
     params = index.params
     avgdl = index.manifest["avgdl"]
     window = index.manifest["params"]["segment_doc_window"]
 
-    qocc = query_term_occurrences(queries, query_col).withColumn(
+    qocc = bm25.query_term_occurrences(queries, query_col).withColumn(
         "qid", F.col("query_id").cast("string")
     )
     # ONE broadcast hydration of the query terms: qterms (the candidate
@@ -351,46 +372,22 @@ def query_topk(
     )
 
     # per-query δ-constant over ALL occurrences, folded in term order
-    # exactly like the relational qconst (bm25.py) — OOV/zero-idf terms
-    # contribute an exact IEEE 0.0 at their fold position, so the sum is
-    # bit-identical to the old in-vocabulary term_id-ordered fold
-    if params.variant == "plus":
-        qconst = (
-            qjoin.groupBy("qid", "query_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("term", (F.col("qtf") * F.col("idf")).alias("v")))
-                ).alias("a")
-            )
-            .select(
-                "qid",
-                "query_id",
-                F.expr(
-                    f"CAST({params.delta!r} AS DOUBLE) * "
-                    "aggregate(a, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)"
-                ).alias("qconst"),
-            )
-        )
-    else:
-        qconst = queries.select(
-            F.col("query_id").cast("string").alias("qid"),
-            "query_id",
-            F.lit(0.0).alias("qconst"),
-        )
-    # one row per query, referenced by the matched join, the deficit
-    # probe AND the pad branch — cache it so the probe job's
-    # materialization is reused instead of re-aggregating the query
-    # terms in every downstream job (session-lifetime by design, see
-    # CLAUDE.md cache policy / session.query_scope)
-    qconst = qconst.cache()
+    # exactly like the relational qconst (the same helper); one row per
+    # query, referenced by the score join and the pad branch — cached
+    # (session-lifetime by design; session.query_scope clears it)
+    qconst = (
+        bm25.query_constants(qjoin, queries, params)
+        .withColumn("qid", F.col("query_id").cast("string"))
+        .cache()
+    )
 
     # okapi negative-ε corner (mean idf0 < 0: tiny-vocab/repetitive
     # corpora): WAND's block-max bounds assume non-negative weights
     # (w·block_max is only an upper bound for w ≥ 0) and matched docs
     # can score BELOW the unmatched 0, so pads may outrank matched.
     # Handled exactly: pruning off (exhaustive decode — still the
-    # compressed-index path), pads generated for EVERY query and
-    # re-ranked together with matched rows.  Indexes built before
+    # compressed-index path) and topk_padded(pad_all=True): pads for
+    # EVERY query, re-ranked together with matched rows.  Indexes built before
     # min_idf was recorded must not silently default to "safe": compute
     # it from the (cached, small) dictionary instead.
     negative_weights = False
@@ -425,8 +422,8 @@ def query_topk(
     joined = post.join(F.broadcast(qterms), "term_id")
 
     # negative-weight mode must emit EVERY candidate from the kernel
-    # (k_eff = window): the pad anti-join below treats "not in local"
-    # as unmatched, and a matched doc dropped by a segment-local top-k
+    # (k_eff = window): the pad anti-join treats "not emitted" as
+    # unmatched, and a matched doc dropped by a segment-local top-k
     # would be resurrected as a score-qconst pad — wrong when its true
     # score is below qconst.
     kernel = _make_stream_kernel(
@@ -436,13 +433,14 @@ def query_topk(
         window if negative_weights else k,
         prune=(mode == "wand" and not negative_weights),
         block_size=index.manifest["params"].get("block_size", 128),
+        slack=0.0 if score_round is None else 2 * 10.0 ** -score_round,
     )
     # hash-partition by group key + sort within partitions: groups are
     # contiguous term_id-sorted runs for the streaming kernel — ONE
     # shuffle, no per-group pandas overhead (same layout as the pack
     # stage).  local top-k rows are tiny (≤ queries × segments × k) —
-    # cache so the merge window, the deficit count and the padding
-    # anti-join reuse one kernel materialization.
+    # cached so the top-k window, the pad probe and the pad anti-join
+    # reuse one kernel materialization.
     # explicit partition count: the kernel is CPU-heavy per input byte,
     # so AQE's size-based coalescing (which a countless repartition
     # would enable) collapses a small-but-compute-dense batch onto one
@@ -456,109 +454,5 @@ def query_topk(
         .mapInPandas(kernel, _KERNEL_SCHEMA)
         .cache()
     )
-
-    # per-query relations (qconst, counts, pad_queries) are one row per
-    # query — broadcast them explicitly so the planner never sort-merges
-    # a tiny side (post-aggregation estimates are unreliable; guide §3.1)
-    w = Window.partitionBy("qid").orderBy(F.desc("ms"), F.desc("doc_id"))
-    matched = (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .join(F.broadcast(qconst), "qid")
-        .select(
-            "qid",
-            "query_id",
-            "doc_id",
-            "rank",
-            (F.col("qconst") + F.col("ms")).alias("score"),
-        )
-    )
-
-    # matched-doc deficit per query (0 rows or < k candidates → pad).
-    # Row count is the right statistic: when the true matched total is
-    # < k every segment emits ALL its candidates (rows == matched), and
-    # when it's ≥ k the row count is ≥ k so no padding triggers.
-    # (Σ n_cand over rows would double-count — each row repeats its
-    # segment's candidate count.)
-    counts = local.groupBy("qid").agg(F.count("*").alias("n_matched"))
-    need = (
-        qconst.join(F.broadcast(counts), "qid", "left")
-        .fillna({"n_matched": 0})
-        .withColumn("deficit", F.greatest(F.lit(0), F.lit(k) - F.col("n_matched")))
-    )
-
-    # δ-padding is part of the plan unconditionally — when no query has
-    # a deficit the broadcast side is empty and the branch costs ~0
-    # (avoids an extra driver-blocking count() job per query batch).
-    # With negative weights (okapi ε < 0) EVERY query pads, because
-    # unmatched docs (score qconst) can outrank matched ones.
-    pad_queries = need if negative_weights else need.filter(F.col("deficit") > 0)
-    pad_queries = pad_queries.select("qid", "query_id", "qconst")
-    # short-circuit: one tiny job over the (cached) kernel output
-    # decides whether any query pads.  In the common case (none) the
-    # returned plan is just `matched`, skipping the pad/merge/anti
-    # branch's ~5 sequential stage materializations per action
-    # (negative-weight mode always pads, so it keeps the full plan
-    # without paying the probe).  Bit-identical: with no pad queries,
-    # whole == matched and merged is empty.
-    if not negative_weights and pad_queries.limit(1).count() == 0:
-        out = matched.select("query_id", "doc_id", "rank", "score")
-        if score_round is not None:
-            out = out.withColumn("score", F.expr(round_sql("score", score_round)))
-        return out
-    # unmatched docs all score exactly qconst; reference argsort puts
-    # higher docIDs first among ties → the k highest unmatched ids are
-    # the only pad candidates that can ever appear in the top k.
-    # Those k ids live inside the global top-(k + m) doc_ids, where m
-    # bounds the query's matched docs within that prefix — so the pad
-    # branch crosses a POOL of that size, never the full docstats
-    # (which would be Q×D when every query pads, e.g. negative-ε).
-    # Deficit mode: n_matched < k, so top-(2k−1) always suffices.
-    # Negative-weight mode: m ≤ max matched rows over pad queries (one
-    # tiny agg over the cached kernel output); if that pool would reach
-    # the whole corpus, fall back to the unsorted full table.
-    all_matched = local.select("qid", "doc_id")
-    if negative_weights:
-        max_matched = need.agg(F.max("n_matched")).collect()[0][0] or 0
-        pool_n = k + int(max_matched)
-    else:
-        # deficit mode: pad queries have < k matched rows each, so the
-        # anti-join's right side shrinks to |pad_queries|·(k−1) once
-        # semi-filtered — broadcast-safe at any scale
-        all_matched = F.broadcast(
-            all_matched.join(
-                F.broadcast(pad_queries.select("qid")), "qid", "left_semi"
-            )
-        )
-        pool_n = 2 * k - 1
-    doc_pool = index.docstats().select("doc_id")
-    n_docs_total = index.manifest.get("n_docs")
-    if n_docs_total is None or pool_n < int(n_docs_total):
-        doc_pool = doc_pool.orderBy(F.desc("doc_id")).limit(pool_n)
-    w2 = Window.partitionBy("qid").orderBy(F.desc("doc_id"))
-    pads = (
-        doc_pool.crossJoin(F.broadcast(pad_queries))
-        .join(all_matched, ["qid", "doc_id"], "left_anti")
-        .withColumn("r2", F.row_number().over(w2))
-        .filter(F.col("r2") <= k)
-        .select("qid", "query_id", "doc_id", F.col("qconst").alias("score"))
-    )
-    # pad queries re-rank their matched rows TOGETHER with the pad
-    # candidates (handles both the deficit case and negative-weight
-    # corpora exactly); untouched queries keep their matched ranks.
-    merged_src = (
-        matched.join(F.broadcast(pad_queries.select("qid")), "qid", "left_semi")
-        .select("qid", "query_id", "doc_id", "score")
-        .unionByName(pads)
-    )
-    w3 = Window.partitionBy("qid").orderBy(F.desc("score"), F.desc("doc_id"))
-    merged = (
-        merged_src.withColumn("rank", F.row_number().over(w3).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "query_id", "doc_id", "rank", "score")
-    )
-    whole = matched.join(F.broadcast(pad_queries.select("qid")), "qid", "left_anti")
-    out = whole.unionByName(merged).select("query_id", "doc_id", "rank", "score")
-    if score_round is not None:
-        out = out.withColumn("score", F.expr(round_sql("score", score_round)))
-    return out
+    scored, base = bm25.qconst_scores(local, qconst, score_round, on="qid")
+    return bm25.topk_padded(scored, base, index.docstats(), k, pad_all=negative_weights)

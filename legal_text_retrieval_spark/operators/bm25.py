@@ -121,6 +121,26 @@ def query_term_occurrences(queries: DataFrame, query_col: str = "query_text") ->
     )
 
 
+def query_constants(qidf: DataFrame, queries: DataFrame, params: BM25Params) -> DataFrame:
+    """(query_id, qconst): the per-query δ-constant every doc is owed,
+    δ · Σ_occurrences qtf·idf folded in term order (0 for okapi).
+    ``qidf`` is (query_id, term, qtf, idf) with idf 0 for unseen terms —
+    such terms add an exact IEEE 0.0 at their fold position.  Shared by
+    the relational scorer and ``wand.query_topk``."""
+    if params.variant != "plus":
+        return queries.select("query_id", F.lit(0.0).alias("qconst"))
+    return (
+        qidf.groupBy("query_id")
+        .agg(F.array_sort(F.collect_list(F.struct("term", (F.col("qtf") * F.col("idf")).alias("v")))).alias("a"))
+        .select(
+            "query_id",
+            F.expr(f"{_fmt(params.delta)} * aggregate(a, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)").alias(
+                "qconst"
+            ),
+        )
+    )
+
+
 class _BM25Pieces:
     """The shared sub-plans of a BM25 batch query:
 
@@ -186,20 +206,7 @@ def _bm25_pieces(
         {"idf": 0.0}
     )
 
-    # per-query δ constant: δ · Σ_occurrences idf(t), folded in term order
-    if params.variant == "plus":
-        qconst = (
-            qidf.groupBy("query_id")
-            .agg(F.array_sort(F.collect_list(F.struct("term", (F.col("qtf") * F.col("idf")).alias("v")))).alias("a"))
-            .select(
-                "query_id",
-                F.expr(f"{_fmt(params.delta)} * aggregate(a, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)").alias(
-                    "qconst"
-                ),
-            )
-        )
-    else:
-        qconst = queries.select("query_id", F.lit(0.0).alias("qconst"))
+    qconst = query_constants(qidf, queries, params)
 
     tfpart = _tf_part(params).replace("__avgdl__", _fmt(avgdl))
     # repartition by query_id BEFORE the (query, doc) aggregation: hash
@@ -311,81 +318,111 @@ def topk_padded(
     base: DataFrame,
     doc_ids: DataFrame,
     k: int,
+    pad_all: bool = False,
 ) -> DataFrame:
     """Top-k of the IMPLICIT full matrix «score(q,d) = matched value,
-    else base(q)» without materializing unmatched pairs — the wand.py
-    δ-padding pattern (index/wand.py:279-301) for relational scorers.
+    else base(q)» without materializing unmatched pairs — the one
+    δ-padding implementation (relational BM25, TF-IDF, combine and the
+    index path ``wand.query_topk`` all end here).
 
     - ``matched_scores``: (query_id, doc_id, score), matched pairs only;
     - ``base``: (query_id, base_score) — one row per query, the score
       every unmatched doc is owed;
     - ``doc_ids``: (doc_id) — the full corpus.
 
-    PRECONDITION (checked by callers via pad_safe): every matched score
-    strictly exceeds its query's base score BEFORE rounding.  Rounding
-    can still collapse matched scores onto the base, so a query joins
-    the pad re-rank branch when it has a deficit (fewer than k matched
-    docs) OR when its k-th matched score does not strictly beat the
-    base — in either case its matched top-k is re-ranked TOGETHER with
-    the k best pad candidates by (score DESC, doc_id DESC), exactly the
-    reference argsort order in every tie pattern.  (Matched rows below
-    the top-k stay excluded: they are dominated by k included matched
-    rows, so they can never enter the true top-k.)  The pad anti-join's
-    left side is docs × pad-queries — bounded by the rare deficit/tie
-    count."""
+    Unmatched docs all score the base and ties rank doc_id DESC, so
+    only a query's k highest unmatched doc_ids can place.  A padding
+    query re-ranks its matched top-k TOGETHER with those k pads by
+    (score DESC, doc_id DESC), exactly the reference argsort order in
+    every tie pattern; the pads come from a POOL of the P highest
+    corpus doc_ids, never from docs × queries.
+
+    Default mode, PRECONDITION (checked by callers via pad_safe): every
+    matched score strictly exceeds its query's base BEFORE rounding.
+    Rounding can still collapse matched scores onto the base, so a
+    query pads when it has a deficit (fewer than k matched docs) OR
+    its k-th matched score does not strictly beat the base.  The pad
+    anti-join excludes the query's top-k rows only: a deficit query's
+    top-k is all its matched rows, and a matched row below a tie
+    query's top-k scores exactly the base, so taking it as a pad is
+    exact.  At most k ids are excluded, so P = 2k.
+
+    ``pad_all`` (negative weights: matched scores may fall BELOW the
+    base): every query pads, ``matched_scores`` must hold ALL matched
+    rows, the anti-join runs against all of them, and P = k + the most
+    matched rows of any query (one small job over ``matched_scores``)."""
     ranked = topk(matched_scores, k).cache()
-    # every non-cached side below is one-row-per-query tiny — broadcast
-    # explicitly so the planner never falls back to a sort-merge join
-    # (post-aggregation size estimates are unreliable; guide §3.1)
-    counts = ranked.groupBy("query_id").agg(
-        F.count("*").alias("n_matched"), F.min("score").alias("kth_score")
-    )
-    need = (
-        base.join(F.broadcast(counts), "query_id", "left")
-        .fillna({"n_matched": 0})
-        .withColumn("deficit", F.greatest(F.lit(0), F.lit(k) - F.col("n_matched")))
-    )
-    deficits = need.filter(
-        (F.col("deficit") > 0) | (F.col("kth_score") <= F.col("base_score"))
-    ).select("query_id", "base_score")
-    # short-circuit: one tiny job over the (cached) ranked rows decides
-    # whether any query pads at all.  In the common case (none) the
-    # returned plan is just `ranked`, skipping ~6 sequential pad-branch
-    # stage materializations per downstream action — measured r7: the
-    # steady-state batch dropped ~0.7 s at sf0.1.  When queries DO pad,
-    # the probe costs one extra sub-second job and the full padded plan
-    # below is returned unchanged (bit-identical either way: with no
-    # deficits, whole == ranked and merged is empty).
-    if deficits.limit(1).count() == 0:
-        return ranked
-    # deficit queries have < k matched docs, so `ranked` holds ALL their
-    # matched pairs — the anti-join below is complete.  Its right side
-    # is pre-filtered to the deficit queries' rows (bounded by
-    # |deficits|·k, never Q·k) so it broadcasts safely at any scale.
-    ranked_deficit = ranked.join(
-        F.broadcast(deficits.select("query_id")), "query_id", "left_semi"
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("doc_id"))
-    pad_cands = (
-        doc_ids.select("doc_id")
-        .crossJoin(F.broadcast(deficits))
-        .join(
-            F.broadcast(ranked_deficit.select("query_id", "doc_id")),
-            ["query_id", "doc_id"],
-            "left_anti",
+    if pad_all:
+        pad_queries = base
+        excluded = matched_scores.select("query_id", "doc_id")
+        most = matched_scores.groupBy("query_id").count().agg(F.max("count")).collect()[0][0]
+        pool_n = k + (most or 0)
+    else:
+        # every non-cached side below is one-row-per-query tiny —
+        # broadcast explicitly so the planner never falls back to a
+        # sort-merge join (post-aggregation size estimates are
+        # unreliable; guide §3.1)
+        counts = ranked.groupBy("query_id").agg(
+            F.count("*").alias("n_matched"), F.min("score").alias("kth_score")
         )
-        .withColumn("r2", F.row_number().over(w2))
-        .filter(F.col("r2") <= k)  # k highest unmatched doc_ids suffice
+        pad_queries = (
+            base.join(F.broadcast(counts), "query_id", "left")
+            .filter(
+                F.col("n_matched").isNull()
+                | (F.col("n_matched") < k)
+                | (F.col("kth_score") <= F.col("base_score"))
+            )
+            .select("query_id", "base_score")
+        )
+        # short-circuit: one tiny job over the (cached) ranked rows
+        # decides whether any query pads at all.  In the common case
+        # (none) the returned plan is just `ranked`, skipping ~6
+        # sequential pad-branch stage materializations per downstream
+        # action — measured r7: the steady-state batch dropped ~0.7 s
+        # at sf0.1.  Bit-identical either way.
+        if pad_queries.limit(1).count() == 0:
+            return ranked
+        # pre-filtered to the padding queries' rows (≤ k each), so it
+        # broadcasts safely at any scale
+        excluded = F.broadcast(
+            ranked.join(F.broadcast(pad_queries.select("query_id")), "query_id", "left_semi")
+            .select("query_id", "doc_id")
+        )
+        pool_n = 2 * k
+    pool = doc_ids.select("doc_id").orderBy(F.desc("doc_id")).limit(pool_n)
+    w = Window.partitionBy("query_id").orderBy(F.desc("doc_id"))
+    pads = (
+        pool.crossJoin(F.broadcast(pad_queries))
+        .join(excluded, ["query_id", "doc_id"], "left_anti")
+        .withColumn("r2", F.row_number().over(w))
+        .filter(F.col("r2") <= k)
         .select("query_id", "doc_id", F.col("base_score").alias("score"))
     )
-    deficit_rows = (
-        ranked_deficit.select("query_id", "doc_id", "score").unionByName(pad_cands)
+    padding = F.broadcast(pad_queries.select("query_id"))
+    merged = topk(
+        ranked.join(padding, "query_id", "left_semi")
+        .select("query_id", "doc_id", "score")
+        .unionByName(pads),
+        k,
     )
-    merged = topk(deficit_rows, k)
-    whole = ranked.join(
-        F.broadcast(deficits.select("query_id")), "query_id", "left_anti"
+    return ranked.join(padding, "query_id", "left_anti").unionByName(merged)
+
+
+def qconst_scores(
+    matched: DataFrame, qconst: DataFrame, score_round: int | None, on: str = "query_id"
+) -> tuple[DataFrame, DataFrame]:
+    """(scored, base) for :func:`topk_padded` from matched (on, doc_id,
+    ms) and qconst (on, query_id, qconst): score = qconst + ms, base =
+    qconst, both rounded when ``score_round`` is set — every BM25 top-k
+    path ranks on the score it returns."""
+    scored = matched.join(F.broadcast(qconst), on).select(
+        "query_id", "doc_id", (F.col("qconst") + F.col("ms")).alias("score")
     )
-    return whole.unionByName(merged)
+    base = qconst.select("query_id", F.col("qconst").alias("base_score"))
+    if score_round is not None:
+        scored = scored.withColumn("score", F.expr(round_sql("score", score_round)))
+        base = base.withColumn("base_score", F.expr(round_sql("base_score", score_round)))
+    return scored, base
 
 
 def bm25_topk(
@@ -404,14 +441,8 @@ def bm25_topk(
     if not p.pad_safe:
         scores = bm25_scores(docs, queries, params, score_round=score_round, _pieces=p, **kw)
         return topk(scores, k)
-    matched = p.matched.join(F.broadcast(p.qconst), "query_id").select(
-        "query_id", "doc_id", (F.col("qconst") + F.col("ms")).alias("score")
-    )
-    base = p.qconst.select("query_id", F.col("qconst").alias("base_score"))
-    if score_round is not None:
-        matched = matched.withColumn("score", F.expr(round_sql("score", score_round)))
-        base = base.withColumn("base_score", F.expr(round_sql("base_score", score_round)))
-    return topk_padded(matched, base, p.doc_ids, k)
+    scored, base = qconst_scores(p.matched, p.qconst, score_round)
+    return topk_padded(scored, base, p.doc_ids, k)
 
 
 # ---------------------------------------------------------------- SQL twin

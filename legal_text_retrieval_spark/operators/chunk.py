@@ -112,29 +112,37 @@ def parent_dedup(hits: DataFrame) -> DataFrame:
     ``evaluate_idx`` sub-id strip + dedup
     (/root/reference/src/utils.py:169-183,416,478).  ``hits`` is
     (query_id, doc_id, rank) over a :func:`chunked_corpus` id space."""
+    return keep_first(
+        hits.select(
+            "query_id",
+            F.expr(
+                f"CASE WHEN doc_id >= {CHUNK_ID_BASE} "
+                f"THEN CAST(floor((doc_id - {CHUNK_ID_BASE}) / 16) AS BIGINT) ELSE doc_id END"
+            ).alias("doc_id"),
+            F.col("rank").alias("pos"),
+        )
+    )
+
+
+def keep_first(rows: DataFrame) -> DataFrame:
+    """(query_id, doc_id, rank) from (query_id, doc_id, pos): each
+    (query, doc) keeps its first (lowest) pos, then ranks 1.. by it —
+    the reference's keep-first dedup re-rank, shared by
+    :func:`parent_dedup` and ``combine.combine_interleave_topk``."""
     from pyspark.sql import Window
 
-    parents = hits.select(
-        "query_id",
-        F.expr(
-            f"CASE WHEN doc_id >= {CHUNK_ID_BASE} "
-            f"THEN CAST(floor((doc_id - {CHUNK_ID_BASE}) / 16) AS BIGINT) ELSE doc_id END"
-        ).alias("doc_id"),
-        F.col("rank").alias("pos"),
-    )
     # one exchange: hash partitioning on query_id co-locates the
     # (query_id, doc_id) groups AND satisfies the rank window below, so
     # the keep-first aggregation and the window sort share it
     # (same pattern as bm25._bm25_pieces.matched)
     first = (
-        parents.repartition(F.col("query_id"))
+        rows.repartition(F.col("query_id"))
         .groupBy("query_id", "doc_id")
         .agg(F.min("pos").alias("pos"))
     )
     w = Window.partitionBy("query_id").orderBy("pos")
-    return (
-        first.withColumn("rank", F.row_number().over(w).cast("long"))
-        .select("query_id", "doc_id", "rank")
+    return first.select(
+        "query_id", "doc_id", F.row_number().over(w).cast("long").alias("rank")
     )
 
 

@@ -5,13 +5,14 @@ modes of the reference's ``do_classify``
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BM25Params
 from ..functions.numeric import dlit, round_sql
 from . import tfidf as TF
 from .bm25 import _bm25_pieces, bm25_scores, bm25_topk, topk, topk_padded
+from .chunk import keep_first
 
 _COMBINE = "CAST(0.33 AS DOUBLE) * cs + CAST(0.67 AS DOUBLE) * bs / bmax"
 
@@ -147,20 +148,7 @@ def combine_interleave_topk(
     t = TF.tfidf_cosine_topk(docs, queries, k, text_col=text_col, score_round=score_round).select(
         "query_id", "doc_id", (2 * F.col("rank")).alias("pos")
     )
-    merged = b.unionByName(t)
-    # one exchange for the keep-first aggregation + rank window
-    # (bm25._bm25_pieces pattern)
-    first = (
-        merged.repartition(F.col("query_id"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.min("pos").alias("pos"))
-    )
-    w = Window.partitionBy("query_id").orderBy("pos")
-    return (
-        first.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "doc_id", "rank")
-    )
+    return keep_first(b.unionByName(t)).filter(F.col("rank") <= k)
 
 
 def combine_interleave_topk_sql(

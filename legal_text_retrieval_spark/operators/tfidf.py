@@ -221,7 +221,7 @@ def tfidf_cosine_topk(
 ) -> DataFrame:
     """Q4 retrieval: deficit-padded top-k over the sparse matched
     kernel — unmatched pairs (score 0) never materialize; queries with
-    fewer than k matches are padded per the wand.py pattern.  Matched
+    fewer than k matches are padded by bm25.topk_padded.  Matched
     scores are strictly positive (see tfidf_cosine_matched), the
     topk_padded precondition."""
     from .bm25 import topk_padded

@@ -74,16 +74,23 @@ def test_resume_is_noop(spark, index_paths, tiny_docs):
     assert after["total_postings"] == before["total_postings"]
 
 
-@pytest.mark.parametrize("k", [10, 150])
-def test_wand_matches_relational_bitwise(spark, index, tiny_docs, tiny_queries, k):
+@pytest.mark.parametrize(
+    "k,score_round",
+    [
+        pytest.param(k, r, id=str(k) if r is None else f"{k}-r{r}")
+        for r in (None, 2, 1)
+        for k in (10, 150)
+    ],
+)
+def test_wand_matches_relational_bitwise(spark, index, tiny_docs, tiny_queries, k, score_round):
     got = (
-        wand.query_topk(index, tiny_queries, k=k)
+        wand.query_topk(index, tiny_queries, k=k, score_round=score_round)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
     want = (
-        B.bm25_topk(tiny_docs, tiny_queries, PARAMS.bm25, k=k, score_round=None)
+        B.bm25_topk(tiny_docs, tiny_queries, PARAMS.bm25, k=k, score_round=score_round)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
@@ -92,15 +99,16 @@ def test_wand_matches_relational_bitwise(spark, index, tiny_docs, tiny_queries, 
     assert (got["score"].values.view("int64") == want["score"].values.view("int64")).all()
 
 
-def test_wand_equals_exhaustive_bitwise(spark, index, tiny_queries):
+@pytest.mark.parametrize("score_round", [None, 2, 1])
+def test_wand_equals_exhaustive_bitwise(spark, index, tiny_queries, score_round):
     a = (
-        wand.query_topk(index, tiny_queries, k=25, mode="wand")
+        wand.query_topk(index, tiny_queries, k=25, mode="wand", score_round=score_round)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
     )
     b = (
-        wand.query_topk(index, tiny_queries, k=25, mode="exhaustive")
+        wand.query_topk(index, tiny_queries, k=25, mode="exhaustive", score_round=score_round)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)

@@ -39,8 +39,15 @@ def _random_case(seed: int):
     return pd.DataFrame(docs), pd.DataFrame(queries), k
 
 
-@pytest.mark.parametrize("seed", range(8))
-def test_bm25_padded_equals_dense_random(spark, seed):
+@pytest.mark.parametrize(
+    "seed,score_round",
+    [
+        pytest.param(seed, r, id=str(seed) if r == 6 else f"{seed}-r{r}")
+        for r in (6, 2, 1)
+        for seed in range(8)
+    ],
+)
+def test_bm25_padded_equals_dense_random(spark, seed, score_round):
     from pyspark.sql import functions as F
 
     from legal_text_retrieval_spark.functions.numeric import round_sql
@@ -51,13 +58,13 @@ def test_bm25_padded_equals_dense_random(spark, seed):
     for variant in ("plus", "okapi"):
         params = BM25Params(variant=variant)
         dense = (
-            topk(bm25_scores(docs, qs, params, score_round=6), k)
+            topk(bm25_scores(docs, qs, params, score_round=score_round), k)
             .toPandas()
             .sort_values(["query_id", "rank"])
             .reset_index(drop=True)
         )
         padded = (
-            bm25_topk(docs, qs, params, k=k)
+            bm25_topk(docs, qs, params, k=k, score_round=score_round)
             .toPandas()
             .sort_values(["query_id", "rank"])
             .reset_index(drop=True)
